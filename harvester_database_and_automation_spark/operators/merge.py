@@ -16,7 +16,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 CHANGE_COL = "change_type"
@@ -121,6 +121,16 @@ def merge_delta(
         touched = F.broadcast(touched)
     kept = current.join(touched, on=list(keys), how="left_anti")
     return kept.unionByName(updates.select(*current.columns))
+
+
+def est_row_bytes(cols: Sequence[str]) -> Column:
+    """Per-row byte estimate of ``cols``, summed by callers to decide
+    ``merge_delta``'s ``broadcast_touched`` hint at plan time: each
+    column's string octet length plus 16 B of UnsafeRow field and offset
+    overhead. NULLs count as the 16 B overhead alone."""
+    return sum(
+        F.coalesce(F.octet_length(F.col(c).cast("string")), F.lit(0)) + F.lit(16) for c in cols
+    )
 
 
 def classify_changes(

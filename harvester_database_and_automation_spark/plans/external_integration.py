@@ -281,15 +281,12 @@ def xz_feed_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("n_chars", T.LongType()),
         ]
     )
-    scan = read_jsonl_xz(
-        spark, xz_path, schema, os.path.join(root, "spool"), chunk_bytes=64 * 1024
-    )
-    n_corrupt = scan.corrupt.count()
-    if n_corrupt:
-        raise ValueError(f"clean feed must re-read clean; {n_corrupt} corrupt lines")
-    out_df = scan.good.select("doc_id", "lang", "n_chars")
-    scan.release()
-    return out_df
+    spool = os.path.join(root, "spool")
+    with read_jsonl_xz(spark, xz_path, schema, spool, chunk_bytes=64 * 1024) as scan:
+        n_corrupt = scan.corrupt.count()
+        if n_corrupt:
+            raise ValueError(f"clean feed must re-read clean; {n_corrupt} corrupt lines")
+        return scan.good.select("doc_id", "lang", "n_chars")
 
 
 @register(
@@ -490,14 +487,12 @@ def http_fetch_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema = T.StructType(
         [T.StructField("r_regionkey", T.LongType()), T.StructField("r_name", T.StringType())]
     )
-    scan = read_jsonl(spark, os.path.dirname(dest), schema)
-    n_corrupt = scan.corrupt.count()
-    if n_corrupt:
-        raise ValueError(f"fetched feed must parse clean; {n_corrupt} corrupt lines")
-    out = scan.good.select("r_regionkey", "r_name")
-    out = spark.createDataFrame(out.collect(), schema)  # detach from the cache before release
-    scan.release()
-    return out
+    with read_jsonl(spark, os.path.dirname(dest), schema) as scan:
+        n_corrupt = scan.corrupt.count()
+        if n_corrupt:
+            raise ValueError(f"fetched feed must parse clean; {n_corrupt} corrupt lines")
+        # Detach from the parse cache the scan releases on exit.
+        return spark.createDataFrame(scan.good.select("r_regionkey", "r_name").collect(), schema)
 
 
 @register(

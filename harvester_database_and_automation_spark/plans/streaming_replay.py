@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from harvester_database_and_automation_spark.catalog import load_table
 from harvester_database_and_automation_spark.plans.registry import register
 from harvester_database_and_automation_spark.plans.shared import scratch_dir
+from harvester_database_and_automation_spark.session import cache_scope
 
 
 @register(
@@ -154,34 +155,31 @@ def _spool_batches(spark: SparkSession, root: str, batches, parent: DataFrame | 
     Spark write + rename — no driver-side row collection.
 
     ``parent``: an expensive shared frame the batches all filter (e.g. a
-    row_number window over the full events table) — persisted for the
+    row_number window over the full events table) — cached for the
     duration of the writes so the window shuffle runs ONCE instead of
     once per batch file (measured ~2 full-corpus window passes saved on
     the three-batch replays)."""
     import glob
     import shutil
 
-    if parent is not None:
-        parent.persist()
-        try:
-            return _spool_batches(spark, root, batches)
-        finally:
-            parent.unpersist()
     feed = os.path.join(root, "feed")
     os.makedirs(feed)
-    for i, df in enumerate(batches):
-        stage = os.path.join(root, f"stage_{i}")
-        # repartition(1), not coalesce(1): coalesce collapses the whole
-        # upstream scan+derivation into the single writer task (measured
-        # 3.6x on the 100x step for the CMS sink); repartition computes
-        # upstream at full parallelism and ships only the batch rows to
-        # one writer. Row order within the file is immaterial — every
-        # replay's state contract is order-independent within a batch.
-        df.repartition(1).write.json(stage)
-        part = glob.glob(os.path.join(stage, "part-*"))[0]
-        dst = os.path.join(feed, f"batch_{i}.json")
-        shutil.move(part, dst)
-        os.utime(dst, (1_700_000_000 + i * 60, 1_700_000_000 + i * 60))
+    with cache_scope() as cache:
+        if parent is not None:
+            cache(parent)
+        for i, df in enumerate(batches):
+            stage = os.path.join(root, f"stage_{i}")
+            # repartition(1), not coalesce(1): coalesce collapses the whole
+            # upstream scan+derivation into the single writer task (measured
+            # 3.6x on the 100x step for the CMS sink); repartition computes
+            # upstream at full parallelism and ships only the batch rows to
+            # one writer. Row order within the file is immaterial — every
+            # replay's state contract is order-independent within a batch.
+            df.repartition(1).write.json(stage)
+            part = glob.glob(os.path.join(stage, "part-*"))[0]
+            dst = os.path.join(feed, f"batch_{i}.json")
+            shutil.move(part, dst)
+            os.utime(dst, (1_700_000_000 + i * 60, 1_700_000_000 + i * 60))
     return feed
 
 

@@ -10,8 +10,10 @@ and shuffle partitions sized to the environment instead of the 200 default.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def _cpus() -> int:
@@ -64,3 +66,26 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def cache_scope() -> Iterator[Callable[[DataFrame], DataFrame]]:
+    """Own every cache one pipeline stage opens.
+
+    Yields ``cache``: ``cache(df)`` caches ``df`` at ``DataFrame.cache()``'s
+    default storage level and returns it. When the block exits, normally
+    or by an exception, every frame cached through it is unpersisted,
+    newest first. A frame handed back to a caller is not cached through a
+    scope: the caller owns its release.
+    """
+    frames: list[DataFrame] = []
+
+    def cache(df: DataFrame) -> DataFrame:
+        frames.append(df.cache())
+        return frames[-1]
+
+    try:
+        yield cache
+    finally:
+        for df in reversed(frames):
+            df.unpersist()

@@ -14,7 +14,7 @@ import os
 from dataclasses import dataclass, field
 from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameReader, SparkSession
 from pyspark.sql import types as T
 
 CORRUPT_COL = "_corrupt_record"
@@ -104,57 +104,64 @@ def read_jsonl_xz(
     schema: T.StructType,
     spool_dir: str,
     chunk_bytes: int = DEFAULT_CHUNK_BYTES,
-) -> JsonlScan:
+) -> ParsedScan:
     """``read_jsonl`` over an ``.xz`` feed via the streaming spool."""
     spool_xz_jsonl(xz_path, spool_dir, chunk_bytes=chunk_bytes)
     return read_jsonl(spark, spool_dir, schema)
 
 
-class JsonlScan(NamedTuple):
-    """(good, corrupt) views over one cached parse of a JSON-lines feed.
+def permissive(reader: DataFrameReader, schema: T.StructType) -> DataFrameReader:
+    """``reader`` in PERMISSIVE mode over ``schema`` plus ``CORRUPT_COL``,
+    which keeps each unparseable record's raw text."""
+    return (
+        reader.option("mode", "PERMISSIVE")
+        .option("columnNameOfCorruptRecord", CORRUPT_COL)
+        .schema(T.StructType(schema.fields + [T.StructField(CORRUPT_COL, T.StringType())]))
+    )
 
-    Both views filter the same cached parent frame; call ``release()``
-    once both are consumed. Unpersisting ``good`` or ``corrupt`` directly
-    is a no-op — Spark's CacheManager (cascade=false) only drops a cache
-    whose plan sameResults the argument, and the filtered views never
-    match the cached parent — which is exactly how a long-lived import
-    loop leaks one full-feed cache per cycle.
+
+class ParsedScan(NamedTuple):
+    """(good, corrupt) views over one cached parse of a feed.
+
+    Both views filter the same cached parent frame. Use the scan as a
+    context manager: leaving the block drops the parent cache (a view read
+    after it re-parses the source). Unpersisting ``good`` or ``corrupt``
+    directly is a no-op — Spark's CacheManager (cascade=false) only drops
+    a cache whose plan sameResults the argument, and the filtered views
+    never match the cached parent — which is exactly how a long-lived
+    import loop leaks one full-feed cache per cycle.
     """
 
     good: DataFrame
     corrupt: DataFrame
     parsed: DataFrame
 
-    def release(self) -> None:
-        """Drop the shared parse cache (the cached parent, not a view)."""
-        self.parsed.unpersist()
+    @classmethod
+    def read(cls, reader: DataFrameReader, fmt: str, path: str, schema: T.StructType) -> ParsedScan:
+        """One cached PERMISSIVE parse of ``path`` split into good rows and
+        corrupt raw records (the quarantine contract of SURVEY.md §2.2 P6):
+        the cache makes the split one parse, not two."""
+        df = permissive(reader, schema).format(fmt).load(path).cache()
+        good = df.filter(df[CORRUPT_COL].isNull()).drop(CORRUPT_COL)
+        corrupt = df.filter(df[CORRUPT_COL].isNotNull()).select(CORRUPT_COL)
+        return cls(good, corrupt, df)
+
+    def __enter__(self) -> ParsedScan:
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.parsed.unpersist()  # the cached parent, not a view
 
 
-def read_jsonl(spark: SparkSession, path: str, schema: T.StructType) -> JsonlScan:
-    """Read JSON-lines with an explicit schema into a ``JsonlScan``.
+def read_jsonl(spark: SparkSession, path: str, schema: T.StructType) -> ParsedScan:
+    """Read JSON-lines with an explicit schema into a ``ParsedScan``.
 
     Unparseable lines land in the corrupt DataFrame with the raw line
-    preserved — the quarantine contract of SURVEY.md §2.2 P6. Gzip inputs
-    are handled by Spark's codec inference from the file extension; xz
-    feeds go through ``read_jsonl_xz`` (streaming spool) since Spark
-    ships no xz codec.
-
-    The parsed frame is cached so the good/corrupt split is one parse, not
-    two; ownership passes to the caller — call ``scan.release()`` once
-    both views are consumed, as the feed-import pipeline does. Long-lived
-    sessions that skip this accumulate one full-feed cache per call.
+    preserved. Gzip inputs are handled by Spark's codec inference from the
+    file extension; xz feeds go through ``read_jsonl_xz`` (streaming spool)
+    since Spark ships no xz codec.
     """
-    full = T.StructType(schema.fields + [T.StructField(CORRUPT_COL, T.StringType())])
-    df = (
-        spark.read.option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", CORRUPT_COL)
-        .schema(full)
-        .json(path)
-        .cache()  # one parse feeding two outputs; caller releases
-    )
-    good = df.filter(df[CORRUPT_COL].isNull()).drop(CORRUPT_COL)
-    corrupt = df.filter(df[CORRUPT_COL].isNotNull()).select(CORRUPT_COL)
-    return JsonlScan(good, corrupt, df)
+    return ParsedScan.read(spark.read, "json", path, schema)
 
 
 @dataclass

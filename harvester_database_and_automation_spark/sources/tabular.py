@@ -9,11 +9,36 @@ quarantined with the raw line preserved.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameReader, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-CORRUPT_COL = "_corrupt_record"
+from harvester_database_and_automation_spark.sources.jsonl import (
+    CORRUPT_COL,
+    ParsedScan,
+    permissive,
+)
+
+
+def _csv_reader(
+    spark: SparkSession,
+    sep: str,
+    header: bool,
+    quote: str,
+    null_value: str | None,
+    date_format: str | None,
+) -> DataFrameReader:
+    reader = (
+        spark.read.option("sep", sep)
+        .option("header", header)
+        .option("quote", quote)
+        .option("enforceSchema", False)  # verify the header against the schema
+    )
+    if null_value is not None:
+        reader = reader.option("nullValue", null_value)
+    if date_format is not None:
+        reader = reader.option("dateFormat", date_format)
+    return reader
 
 
 def read_csv(
@@ -25,26 +50,13 @@ def read_csv(
     quote: str = '"',
     null_value: str | None = None,
     date_format: str | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Read a delimited file with a mandatory explicit schema into
-    (good, corrupt). No schema inference, ever (SURVEY.md §1.3)."""
-    full = T.StructType(schema.fields + [T.StructField(CORRUPT_COL, T.StringType())])
-    reader = (
-        spark.read.option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", CORRUPT_COL)
-        .option("sep", sep)
-        .option("header", header)
-        .option("quote", quote)
-        .option("enforceSchema", False)  # verify the header against the schema
-    )
-    if null_value is not None:
-        reader = reader.option("nullValue", null_value)
-    if date_format is not None:
-        reader = reader.option("dateFormat", date_format)
-    df = reader.schema(full).csv(path).cache()
-    good = df.filter(df[CORRUPT_COL].isNull()).drop(CORRUPT_COL)
-    corrupt = df.filter(df[CORRUPT_COL].isNotNull())
-    return good, corrupt
+) -> ParsedScan:
+    """Read a delimited file with a mandatory explicit schema into a
+    (good, corrupt) ``ParsedScan`` over one cached parse; use it as a
+    context manager so the parse cache is released. No schema inference,
+    ever (SURVEY.md §1.3)."""
+    reader = _csv_reader(spark, sep, header, quote, null_value, date_format)
+    return ParsedScan.read(reader, "csv", path, schema)
 
 
 def read_csv_strict(
@@ -72,20 +84,8 @@ def read_csv_strict(
     contract — projecting callers keep the guarantee and pay the full
     parse; use ``read_csv`` when prunable reads matter more than the
     tripwire."""
-    full = T.StructType(schema.fields + [T.StructField(CORRUPT_COL, T.StringType())])
-    reader = (
-        spark.read.option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", CORRUPT_COL)
-        .option("sep", sep)
-        .option("header", header)
-        .option("quote", quote)
-        .option("enforceSchema", False)
-    )
-    if null_value is not None:
-        reader = reader.option("nullValue", null_value)
-    if date_format is not None:
-        reader = reader.option("dateFormat", date_format)
-    df = reader.schema(full).csv(path)
+    reader = _csv_reader(spark, sep, header, quote, null_value, date_format)
+    df = permissive(reader, schema).csv(path)
     # Always-true but not constant-foldable, and it names every field —
     # the filter's required columns then cover the whole schema, which
     # defeats parser column pruning however the caller projects.

@@ -22,12 +22,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from harvester_database_and_automation_spark.operators.merge import merge_delta
+from harvester_database_and_automation_spark.operators.merge import est_row_bytes, merge_delta
 from harvester_database_and_automation_spark.operators.publish import (
     current_version,
     publish_versioned,
     read_published,
 )
+from harvester_database_and_automation_spark.session import cache_scope
 
 
 def stream_upsert_into_published(
@@ -47,7 +48,7 @@ def stream_upsert_into_published(
     matched ones), as one atomic new version per micro-batch.
 
     The merge's anti-join is broadcast-HINTED at plan time from the
-    micro-batch's MEASURED row count and key bytes (the batch is persisted
+    micro-batch's MEASURED row count and key bytes (the batch is cached
     for the duration, so the count costs one cached scan): AQE's own
     broadcast flip comes only after the published side's map stage has
     already written its shuffle output (operators/merge.py doctrine). An
@@ -59,37 +60,26 @@ def stream_upsert_into_published(
     stream = reader.load(src_dir)
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if current_version(table_dir) is None:
-            merged = batch_df
-        else:
-            # merge_delta: the published table anti-joins the measured,
-            # plan-time-broadcast key set map-side — no full-outer
-            # exchange of the accumulated table per batch.
-            batch_df.persist()
-            stats = batch_df.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.coalesce(
-                    F.sum(
-                        sum(
-                            (F.coalesce(F.octet_length(F.col(k).cast("string")), F.lit(0))
-                             + F.lit(16))
-                            for k in keys
-                        )
-                    ),
-                    F.lit(0),
-                ).alias("key_bytes"),
-            ).collect()[0]
-            hint = (
-                stats["n"] <= broadcast_batch_max_rows
-                and stats["key_bytes"] <= broadcast_batch_max_bytes
-            )
-            merged = merge_delta(
-                read_published(spark, table_dir), batch_df, keys, broadcast_touched=hint
-            )
-        try:
+        with cache_scope() as cache:
+            if current_version(table_dir) is None:
+                merged = batch_df
+            else:
+                # merge_delta: the published table anti-joins the measured,
+                # plan-time-broadcast key set map-side — no full-outer
+                # exchange of the accumulated table per batch.
+                batch_df = cache(batch_df)
+                stats = batch_df.agg(
+                    F.count(F.lit(1)).alias("n"),
+                    F.coalesce(F.sum(est_row_bytes(keys)), F.lit(0)).alias("key_bytes"),
+                ).collect()[0]
+                hint = (
+                    stats["n"] <= broadcast_batch_max_rows
+                    and stats["key_bytes"] <= broadcast_batch_max_bytes
+                )
+                merged = merge_delta(
+                    read_published(spark, table_dir), batch_df, keys, broadcast_touched=hint
+                )
             publish_versioned(merged, table_dir)
-        finally:
-            batch_df.unpersist()
 
     (
         stream.writeStream.foreachBatch(merge_batch)

@@ -36,7 +36,7 @@ def _annotate(df):
     ).select(*[f.name for f in FEED_SCHEMA.fields])
 
 
-def _run(spark, feed, table):
+def _run(spark, feed, table, annotate=_annotate):
     return run_feed_import(
         spark,
         feed,
@@ -46,9 +46,16 @@ def _run(spark, feed, table):
         metadata_cols=["country"],
         payload_cols=["sequence"],
         checks={"country_required": not_null("country")},
-        annotate=_annotate,
+        annotate=annotate,
         required_fields={"seq_id", "sequence"},
     )
+
+
+def _persistent_rdds(spark) -> set[int]:
+    """Ids of the RDDs the session holds persisted. A stage must leave none
+    of its own behind; ids, not a count, because Spark's ContextCleaner may
+    drop an earlier test's unreferenced cache while the stage runs."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
 
 def test_feed_import_two_cycles(spark, tmp_path):
@@ -89,6 +96,22 @@ def test_feed_import_two_cycles(spark, tmp_path):
     assert t2["b"]["country"] == "FR"
     assert t2["b"]["n_mut"] == 0  # stored annotation kept, not recomputed
     assert t2["d"]["n_mut"] == 3
+
+
+def test_feed_import_failing_annotate_releases_caches(spark, tmp_path):
+    """An annotate stage that raises must not leak the parse or the
+    classification cache: the import runs as a long-lived poll loop, so a
+    leak on one failed cycle adds up over the following ones."""
+    feed = str(tmp_path / "feed.jsonl")
+    _write_feed(feed, [{"seq_id": "a", "country": "CH", "sequence": "ACGG"}])
+
+    def broken(df):
+        raise RuntimeError("annotation tool unavailable")
+
+    before = _persistent_rdds(spark)
+    with pytest.raises(RuntimeError, match="annotation tool"):
+        _run(spark, feed, str(tmp_path / "tbl"), annotate=broken)
+    assert _persistent_rdds(spark) - before == set()
 
 
 def test_feed_import_drift_aborts(spark, tmp_path):
@@ -521,6 +544,7 @@ def test_run_release_cycle_rejects_inflating_payload_reattach(spark, tmp_path):
         [(1, 1, 0, 30, "PAYLOAD-A"), (1, 1, 0, 30, "PAYLOAD-B")],
         "sample_id bigint, attempt_id int, batch int, consensus_n int, payload string",
     )
+    before = _persistent_rdds(spark)
     with pytest.raises(ValueError, match="re-attach"):
         run_release_cycle(
             spark, c1, expected, c1.select("sample_id"), table, rules,
@@ -529,6 +553,9 @@ def test_run_release_cycle_rejects_inflating_payload_reattach(spark, tmp_path):
             released_cols=["sample_id", "consensus_n", "payload"],
             payload_cols=["payload"],
         )
+    # The raise releases every cache the cycle opened (flagged, annotated,
+    # decided and the re-attached delta).
+    assert _persistent_rdds(spark) - before == set()
 
 
 def test_run_release_cycle_rejects_duplicate_accepted_keys(spark, tmp_path):
@@ -545,9 +572,37 @@ def test_run_release_cycle_rejects_duplicate_accepted_keys(spark, tmp_path):
         [(1, 1, 0, 30), (1, 2, 0, 20)],
         "sample_id bigint, attempt_id int, batch int, consensus_n int",
     )
+    before = _persistent_rdds(spark)
     with pytest.raises(ValueError, match="duplicate"):
         run_release_cycle(
             spark, c1, expected, c1.select("sample_id"), table, [],
             key="sample_id", quality_col="consensus_n", batch_col="batch",
             tiebreak_col="attempt_id",
         )
+    # The raise releases every cache the cycle opened (flagged, annotated,
+    # decided).
+    assert _persistent_rdds(spark) - before == set()
+
+
+def test_run_release_cycle_failed_publish_releases_caches(spark, tmp_path, monkeypatch):
+    """A publish that raises in the overlapped tail must release the
+    cascade caches AND the manifest cache, which never reaches a caller."""
+    from harvester_database_and_automation_spark.operators import publish
+    from harvester_database_and_automation_spark.pipelines.release import run_release_cycle
+
+    def broken_publish(df, table_dir):
+        raise OSError("object store unavailable")
+
+    monkeypatch.setattr(publish, "publish_versioned", broken_publish)
+    expected = spark.createDataFrame([(1, 0)], "sample_id bigint, batch int")
+    c1 = spark.createDataFrame(
+        [(1, 1, 0, 30)], "sample_id bigint, attempt_id int, batch int, consensus_n int"
+    )
+    before = _persistent_rdds(spark)
+    with pytest.raises(OSError, match="object store"):
+        run_release_cycle(
+            spark, c1, expected, c1.select("sample_id"), str(tmp_path / "released"), [],
+            key="sample_id", quality_col="consensus_n", batch_col="batch",
+            tiebreak_col="attempt_id",
+        )
+    assert _persistent_rdds(spark) - before == set()

@@ -78,14 +78,13 @@ def test_read_jsonl_quarantines_corrupt(spark, tmp_path):
     schema = T.StructType(
         [T.StructField("id", T.LongType()), T.StructField("name", T.StringType())]
     )
-    scan = read_jsonl(spark, str(p), schema)
-    assert {r["id"] for r in scan.good.collect()} == {1, 2}
-    assert scan.corrupt.count() == 1
-    assert "not json" in scan.corrupt.collect()[0][0]
-    # release() must drop the shared PARENT cache — unpersisting the
-    # filtered views is a CacheManager no-op (the feed-import leak class).
-    assert scan.parsed.storageLevel.useMemory
-    scan.release()
+    with read_jsonl(spark, str(p), schema) as scan:
+        assert {r["id"] for r in scan.good.collect()} == {1, 2}
+        assert scan.corrupt.count() == 1
+        assert "not json" in scan.corrupt.collect()[0][0]
+        assert scan.parsed.storageLevel.useMemory
+    # Leaving the block must drop the shared PARENT cache — unpersisting
+    # the filtered views is a CacheManager no-op (the feed-import leak class).
     assert not scan.parsed.storageLevel.useMemory
 
 
@@ -115,11 +114,12 @@ def test_read_jsonl_xz_spools_line_aligned_chunks(spark, tmp_path):
     schema = T.StructType(
         [T.StructField("id", T.LongType()), T.StructField("name", T.StringType())]
     )
-    scan = read_jsonl_xz(spark, str(xz), schema, str(tmp_path / "spool2"), chunk_bytes=2000)
-    assert scan.good.count() == 199
-    assert scan.corrupt.count() == 1
-    assert {r["id"] for r in scan.good.collect()} == set(range(200)) - {50}
-    scan.release()
+    with read_jsonl_xz(
+        spark, str(xz), schema, str(tmp_path / "spool2"), chunk_bytes=2000
+    ) as scan:
+        assert scan.good.count() == 199
+        assert scan.corrupt.count() == 1
+        assert {r["id"] for r in scan.good.collect()} == set(range(200)) - {50}
 
     rep = check_field_drift(spark, str(tmp_path / "spool2"), required={"id", "name"})
     assert rep.ok
@@ -151,10 +151,14 @@ def test_read_csv_semicolon_typed(spark, tmp_path):
             T.StructField("score", T.DoubleType()),
         ]
     )
-    good, corrupt = read_csv(spark, str(p), schema, sep=";")
-    assert {r["sample"] for r in good.collect()} == {"s1", "s3"}
-    assert corrupt.count() == 1
-    assert "oops" in corrupt.collect()[0]["_corrupt_record"]
+    with read_csv(spark, str(p), schema, sep=";") as scan:
+        assert {r["sample"] for r in scan.good.collect()} == {"s1", "s3"}
+        assert scan.corrupt.count() == 1
+        assert "oops" in scan.corrupt.collect()[0]["_corrupt_record"]
+        assert scan.parsed.storageLevel.useMemory
+    # The parse cache is released with the block (it leaked when read_csv
+    # returned only the two filtered views).
+    assert not scan.parsed.storageLevel.useMemory
 
 
 def test_read_csv_strict_one_pass_tripwire(spark, tmp_path):
@@ -287,9 +291,10 @@ def test_read_gzip_csv_transparently(spark, tmp_path):
             T.StructField("score", T.DoubleType()),
         ]
     )
-    good, corrupt = read_csv(spark, str(p), schema, sep=";")
-    assert {r["sample"] for r in good.collect()} == {"s1", "s2"}
-    assert corrupt.count() == 0
+    with read_csv(spark, str(p), schema, sep=";") as scan:
+        assert {r["sample"] for r in scan.good.collect()} == {"s1", "s2"}
+        assert scan.corrupt.count() == 0
+    assert not scan.parsed.storageLevel.useMemory
 
 
 def test_orc_roundtrip_with_predicate_pushdown(spark, tmp_path):
