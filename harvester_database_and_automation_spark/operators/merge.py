@@ -123,6 +123,18 @@ def merge_delta(
     return kept.unionByName(updates.select(*current.columns))
 
 
+# Plan-time broadcast gate for a measured delta. F.broadcast bypasses AQE's
+# size check, so bytes are bounded as well as rows (wide composite keys).
+BROADCAST_MAX_ROWS = 1_000_000
+BROADCAST_MAX_BYTES = 64 * 1024 * 1024
+
+
+def broadcastable(n_rows: int, est_bytes: int) -> bool:
+    """Whether a measured delta of ``n_rows`` rows whose summed
+    :func:`est_row_bytes` is ``est_bytes`` may be broadcast-hinted."""
+    return n_rows <= BROADCAST_MAX_ROWS and est_bytes <= BROADCAST_MAX_BYTES
+
+
 def est_row_bytes(cols: Sequence[str]) -> Column:
     """Per-row byte estimate of ``cols``, summed by callers to decide
     ``merge_delta``'s ``broadcast_touched`` hint at plan time: each

@@ -31,6 +31,7 @@ from harvester_database_and_automation_spark.operators.external import (
 )
 from harvester_database_and_automation_spark.operators.merge import (
     CHANGE_COL,
+    broadcastable,
     classify_changes,
     est_row_bytes,
     merge_delta,
@@ -90,8 +91,6 @@ def run_feed_import(
     checks: dict[str, Column],
     annotate: Callable[[DataFrame], DataFrame] | None = None,
     required_fields: set[str] | None = None,
-    broadcast_delta_max_rows: int = 1_000_000,
-    broadcast_delta_max_bytes: int = 64 * 1024 * 1024,
 ) -> FeedImportReport:
     """Run one import cycle of ``feed_path`` into ``table_dir``.
 
@@ -100,14 +99,10 @@ def run_feed_import(
     invoked ONLY on insert/payload_changed rows; unchanged and
     metadata-changed rows keep their stored annotation untouched.
 
-    Broadcast gating is on MEASURED rows AND estimated bytes: an explicit
-    ``F.broadcast`` bypasses autoBroadcastJoinThreshold and AQE's size
-    check entirely, so a row-count gate alone would happily broadcast
-    hundreds of MB of composite/wide string keys on exactly the
-    large-delta days the gate exists for (round-9 ADVICE). The byte
-    estimate (per-row key/metadata octet lengths, summed in the same
-    classification rollup that feeds the run report — no extra action)
-    must stay under ``broadcast_delta_max_bytes`` as well.
+    Broadcast hints follow ``operators.merge.broadcastable``: MEASURED
+    rows AND estimated bytes (round-9 ADVICE). The byte estimate (per-row
+    key/metadata octet lengths) is summed in the same classification
+    rollup that feeds the run report — no extra action.
     """
     if required_fields:
         drift = check_field_drift(spark, feed_path, required=required_fields)
@@ -172,9 +167,6 @@ def run_feed_import(
         n_meta = by_type.get("metadata_changed", 0)
         n_delete = by_type.get("delete", 0)
 
-        def small(n: int, est_bytes: int) -> bool:
-            return n <= broadcast_delta_max_rows and est_bytes <= broadcast_delta_max_bytes
-
         process_key_bytes = key_bytes.get("insert", 0) + key_bytes.get("payload_changed", 0)
         if first_run:
             to_process = clean
@@ -182,7 +174,7 @@ def run_feed_import(
             process_keys = classified.filter(
                 F.col(CHANGE_COL).isin("insert", "payload_changed")
             ).select(*keys)
-            if small(n_process, process_key_bytes):
+            if broadcastable(n_process, process_key_bytes):
                 process_keys = F.broadcast(process_keys)
             to_process = clean.join(process_keys, on=list(keys), how="left_semi")
         n_tool_failed = 0
@@ -215,7 +207,7 @@ def run_feed_import(
         meta_side = classified.filter(F.col(CHANGE_COL) == "metadata_changed").select(
             *keys, *metadata_cols
         )
-        if small(n_meta, row_bytes.get("metadata_changed", 0)):
+        if broadcastable(n_meta, row_bytes.get("metadata_changed", 0)):
             meta_side = F.broadcast(meta_side)
         meta_updates = meta_side.join(current.select(*keys, *kept_cols), list(keys)).select(
             *current.columns
@@ -232,7 +224,7 @@ def run_feed_import(
         )
         final = merge_delta(
             current, updates, keys, delete_keys=deletes,
-            broadcast_touched=small(n_process + n_meta + n_delete, touched_key_bytes),
+            broadcast_touched=broadcastable(n_process + n_meta + n_delete, touched_key_bytes),
         )
         version = publish_versioned(final, table_dir)
 

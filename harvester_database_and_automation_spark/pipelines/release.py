@@ -135,7 +135,6 @@ def run_release_cycle(
     released_schema: str | None = None,
     released_cols: list[str] | None = None,
     payload_cols: list[str] | None = None,
-    broadcast_accepted_max_bytes: int = 64 * 1024 * 1024,
 ) -> tuple[DataFrame, DataFrame, ReleaseCycleReport]:
     """One cycle of the SPSP release pipeline (SURVEY.md §3.2, the `main`
     flow of database/R/export_spsp_submission.R:20-57), composed from the
@@ -193,11 +192,11 @@ def run_release_cycle(
     best attempt per key survives the cascade. Misconfigured rules are a
     hard error here (one count/distinct aggregation over the delta-sized
     accepted set), not silent row doubling in the published table. The
-    same aggregation measures the accepted delta's key bytes, so the
-    merge's anti-join is broadcast-HINTED at plan time whenever the delta
-    is provably bounded (< ``broadcast_accepted_max_bytes``) — AQE's own
-    flip happens only after the stored side's map stage has written its
-    shuffle output (operators/merge.py doctrine).
+    same aggregation measures the accepted delta, so the merge's anti-join
+    is broadcast-HINTED at plan time when ``merge.broadcastable`` bounds
+    it (1M rows AND 64 MiB of key bytes: a cycle accepting more than 1M
+    rows is left to AQE) — AQE's own flip happens only after the stored
+    side's map stage has written its shuffle output (merge.py doctrine).
 
     Scale shape: completeness is two key-level aggregations (no payloads);
     the cascade is one window over (key) partitions plus a ``when`` chain;
@@ -207,6 +206,7 @@ def run_release_cycle(
     driver-side except the bounded report counts.
     """
     from harvester_database_and_automation_spark.operators.merge import (
+        broadcastable,
         est_row_bytes,
         merge_delta,
     )
@@ -288,7 +288,7 @@ def run_release_cycle(
                 "fail worse duplicates (add a duplicate_idx > 1 rule) before rows "
                 "reach the merge; merging would silently double published rows"
             )
-        hint = stats["key_bytes"] <= broadcast_accepted_max_bytes
+        hint = broadcastable(stats["n"], stats["key_bytes"])
         to_release = accepted
         if payload_cols:
             # Re-attach payloads to the accepted delta only: the stored

@@ -96,29 +96,8 @@ def streaming_change_router_replay(spark: SparkSession, sf_dir: str) -> DataFram
         .option("maxFilesPerTrigger", 1)
         .json(feed)
     )
-    out = os.path.join(root, "routed")
-    with _stream_state_partitions(spark):
-        def _sink(batch_df: DataFrame, batch_id: int) -> None:
-            # Plain append parquet per micro-batch: skips the streaming
-            # parquet sink's per-batch manifest commit + _spark_metadata
-            # log (pure fixed cost here). NOT idempotent under batch-level
-            # re-execution in general — safe here only because availableNow
-            # + a fresh per-run output dir + fresh checkpoint mean a failed
-            # batch aborts the whole replay rather than retrying. Reusing
-            # this sink with a long-lived checkpoint would need a
-            # per-batch_id subdir (or an idempotent format) instead.
-            batch_df.write.mode("append").parquet(out)
-
-        q = (
-            streaming_change_router(stream)
-            .writeStream.foreachBatch(_sink)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.read.parquet(out).select("id", "content_hash", "change_kind")
+    routed = _run_replay(spark, streaming_change_router(stream), root, "routed")
+    return routed.select("id", "content_hash", "change_kind")
 
 
 @contextmanager
@@ -147,6 +126,39 @@ def _stream_state_partitions(spark: SparkSession, n: int = 4):
         yield
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
+
+
+def _run_replay(
+    spark: SparkSession, stream: DataFrame, root: str, name: str, output_mode: str = "append"
+) -> DataFrame:
+    """Run ``stream`` to completion (``availableNow``) with the replay
+    state-partition count, appending every micro-batch to parquet under
+    ``root/name`` with the checkpoint at ``root/ckpt``; return the output
+    read back as a batch frame.
+
+    Plain append parquet per micro-batch skips the streaming parquet
+    sink's per-batch manifest commit + _spark_metadata log (pure fixed
+    cost here) and also lands update-mode output. It is NOT idempotent
+    under batch-level re-execution in general — safe here only because
+    availableNow + a fresh per-run output dir + fresh checkpoint mean a
+    failed batch aborts the whole replay rather than retrying. Reusing
+    this sink with a long-lived checkpoint would need a per-batch_id
+    subdir (or an idempotent format) instead."""
+    out = os.path.join(root, name)
+
+    def sink(batch_df: DataFrame, batch_id: int) -> None:
+        batch_df.write.mode("append").parquet(out)
+
+    with _stream_state_partitions(spark):
+        (
+            stream.writeStream.foreachBatch(sink)
+            .option("checkpointLocation", os.path.join(root, "ckpt"))
+            .outputMode(output_mode)
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
+    return spark.read.parquet(out)
 
 
 def _spool_batches(spark: SparkSession, root: str, batches, parent: DataFrame | None = None) -> str:
@@ -278,29 +290,7 @@ def streaming_watermark_window_replay(spark: SparkSession, sf_dir: str) -> DataF
         stream, ts_col="ts", key_col="event_type", window="1 hour",
         watermark="2 hours", value_col="cents",
     )
-    out = os.path.join(root, "windows")
-    with _stream_state_partitions(spark):
-        def _sink(batch_df: DataFrame, batch_id: int) -> None:
-            # Plain append parquet per micro-batch: skips the streaming
-            # parquet sink's per-batch manifest commit + _spark_metadata
-            # log (pure fixed cost here). NOT idempotent under batch-level
-            # re-execution in general — safe here only because availableNow
-            # + a fresh per-run output dir + fresh checkpoint mean a failed
-            # batch aborts the whole replay rather than retrying. Reusing
-            # this sink with a long-lived checkpoint would need a
-            # per-batch_id subdir (or an idempotent format) instead.
-            batch_df.write.mode("append").parquet(out)
-
-        q = (
-            agg
-            .writeStream.foreachBatch(_sink)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.read.parquet(out).select(
+    return _run_replay(spark, agg, root, "windows").select(
         (F.unix_timestamp("window_start") - epoch_2024).cast("bigint").alias("window_start_s"),
         (F.unix_timestamp("window_end") - epoch_2024).cast("bigint").alias("window_end_s"),
         "event_type",
@@ -370,29 +360,7 @@ def streaming_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("ts", F.timestamp_seconds(F.col("s") + 1_704_067_200))
     )
     deduped = dedup_within_watermark(stream, ["user_id"], ts_col="ts", watermark="2 hours")
-    out = os.path.join(root, "deduped")
-    with _stream_state_partitions(spark):
-        def _sink(batch_df: DataFrame, batch_id: int) -> None:
-            # Plain append parquet per micro-batch: skips the streaming
-            # parquet sink's per-batch manifest commit + _spark_metadata
-            # log (pure fixed cost here). NOT idempotent under batch-level
-            # re-execution in general — safe here only because availableNow
-            # + a fresh per-run output dir + fresh checkpoint mean a failed
-            # batch aborts the whole replay rather than retrying. Reusing
-            # this sink with a long-lived checkpoint would need a
-            # per-batch_id subdir (or an idempotent format) instead.
-            batch_df.write.mode("append").parquet(out)
-
-        q = (
-            deduped.select("user_id", "first_type")
-            .writeStream.foreachBatch(_sink)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.read.parquet(out).select("user_id", "first_type")
+    return _run_replay(spark, deduped.select("user_id", "first_type"), root, "deduped")
 
 
 @register(
@@ -575,29 +543,7 @@ def streaming_session_window_replay(spark: SparkSession, sf_dir: str) -> DataFra
         stream, ts_col="ts", key_col="user_id", gap="30 minutes",
         watermark="2 hours", value_col="cents",
     )
-    out = os.path.join(root, "sessions")
-    with _stream_state_partitions(spark):
-        def _sink(batch_df: DataFrame, batch_id: int) -> None:
-            # Plain append parquet per micro-batch: skips the streaming
-            # parquet sink's per-batch manifest commit + _spark_metadata
-            # log (pure fixed cost here). NOT idempotent under batch-level
-            # re-execution in general — safe here only because availableNow
-            # + a fresh per-run output dir + fresh checkpoint mean a failed
-            # batch aborts the whole replay rather than retrying. Reusing
-            # this sink with a long-lived checkpoint would need a
-            # per-batch_id subdir (or an idempotent format) instead.
-            batch_df.write.mode("append").parquet(out)
-
-        q = (
-            agg
-            .writeStream.foreachBatch(_sink)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.read.parquet(out).select(
+    return _run_replay(spark, agg, root, "sessions").select(
         (F.unix_timestamp("session_start") - epoch_2024).cast("bigint").alias("start_s"),
         (F.unix_timestamp("session_end") - epoch_2024).cast("bigint").alias("end_s"),
         "user_id",
@@ -671,23 +617,10 @@ def streaming_stateful_ledger_replay(spark: SparkSession, sf_dir: str) -> DataFr
         .option("maxFilesPerTrigger", 1)
         .json(feed)
     )
-    out = os.path.join(root, "ledger")
-    os.makedirs(out)
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(out)
-
-    with _stream_state_partitions(spark):
-        q = (
-            running_dedup_counts(stream, key_col="key")
-            .writeStream.foreachBatch(sink)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.read.parquet(out).select("key", "total_seen", "new_in_batch")
+    ledger = _run_replay(
+        spark, running_dedup_counts(stream, key_col="key"), root, "ledger", output_mode="update"
+    )
+    return ledger.select("key", "total_seen", "new_in_batch")
 
 
 def _cms_replay_oracle() -> str:

@@ -22,7 +22,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from harvester_database_and_automation_spark.operators.merge import est_row_bytes, merge_delta
+from harvester_database_and_automation_spark.operators.merge import (
+    broadcastable,
+    est_row_bytes,
+    merge_delta,
+)
 from harvester_database_and_automation_spark.operators.publish import (
     current_version,
     publish_versioned,
@@ -40,8 +44,6 @@ def stream_upsert_into_published(
     keys: Sequence[str],
     fmt: str = "csv",
     reader_options: dict[str, str] | None = None,
-    broadcast_batch_max_rows: int = 1_000_000,
-    broadcast_batch_max_bytes: int = 64 * 1024 * 1024,
 ) -> None:
     """One poll iteration: merge every unseen file under ``src_dir`` into
     the published table at ``table_dir`` (insert new keys, overwrite
@@ -52,8 +54,8 @@ def stream_upsert_into_published(
     for the duration, so the count costs one cached scan): AQE's own
     broadcast flip comes only after the published side's map stage has
     already written its shuffle output (operators/merge.py doctrine). An
-    availableNow first poll over a bulk backlog can exceed the bound — the
-    gate leaves that batch to AQE instead of force-broadcasting it."""
+    availableNow first poll over a bulk backlog can exceed the bound
+    (``merge.broadcastable``) — the gate leaves it to AQE instead."""
     reader = spark.readStream.format(fmt).schema(schema)
     for k, v in (reader_options or {}).items():
         reader = reader.option(k, v)
@@ -72,10 +74,7 @@ def stream_upsert_into_published(
                     F.count(F.lit(1)).alias("n"),
                     F.coalesce(F.sum(est_row_bytes(keys)), F.lit(0)).alias("key_bytes"),
                 ).collect()[0]
-                hint = (
-                    stats["n"] <= broadcast_batch_max_rows
-                    and stats["key_bytes"] <= broadcast_batch_max_bytes
-                )
+                hint = broadcastable(stats["n"], stats["key_bytes"])
                 merged = merge_delta(
                     read_published(spark, table_dir), batch_df, keys, broadcast_touched=hint
                 )

@@ -246,13 +246,13 @@ def compare_maps(
     }
 
 
-def main() -> int:
+def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--threshold", type=float, default=2.0)
     ap.add_argument("--floor-sec", type=float, default=1.0,
                     help="minimum absolute excess (current-box seconds) to flag")
     ap.add_argument("--baseline", default=None, help="git rev (default: oldest commit)")
-    args = ap.parse_args()
+    args = ap.parse_args(argv)
 
     rev = args.baseline or _oldest_committed_rev()
     cur, old = _load_map(None), _load_map(rev)

@@ -3,7 +3,7 @@
 curve, since the driver generates testdata only up to sf0.1.
 
 NOT test data for correctness — the oracle harness never reads it. It
-exists solely so scripts/scaling_curve_100x.py can measure a 100x data
+exists solely so `scripts/scaling_curve.py --sf1` can measure a 100x data
 step (SCALING_100x.json) instead of extrapolating from the single 10x
 step in SCALING.json. Rows are derived from the driver's own sf0.1
 tables by FK-consistent replication:

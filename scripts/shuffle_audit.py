@@ -29,13 +29,13 @@ import json
 import os
 import subprocess
 import sys
-import urllib.request
 from pathlib import Path
 
 os.environ.setdefault("SPARK_UI", "1")
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+from harvester_database_and_automation_spark.metrics import new_stages, rest  # noqa: E402
 from harvester_database_and_automation_spark.plans import QUERIES  # noqa: E402
 from harvester_database_and_automation_spark.session import get_spark  # noqa: E402
 
@@ -52,12 +52,6 @@ ANNOTATED: dict[str, str] = {
 }
 
 
-def _stage_rows(ui: str, app_id: str) -> list[dict]:
-    url = f"{ui}/api/v1/applications/{app_id}/stages?status=complete"
-    with urllib.request.urlopen(url) as r:  # localhost UI, loopback only
-        return json.load(r)
-
-
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     names = sys.argv[1:] or list(QUERIES)
@@ -67,11 +61,7 @@ def main() -> int:
         return 2
 
     spark = get_spark("shuffle-audit")
-    sc = spark.sparkContext
-    ui, app_id = sc.uiWebUrl, sc.applicationId
-    if not ui:
-        print("Spark UI disabled — set SPARK_UI=1", file=sys.stderr)
-        return 2
+    rest(spark, "jobs")  # fails fast, naming SPARK_UI=1, when the UI is off
 
     def run(name: str) -> None:
         QUERIES[name].fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
@@ -79,18 +69,10 @@ def main() -> int:
     for name in names:  # warmup: shared hubs, JIT, parquet footers
         run(name)
 
-    seen: set[tuple[int, int]] = {
-        (s["stageId"], s["attemptId"]) for s in _stage_rows(ui, app_id)
-    }
     results: dict[str, dict] = {}
     for name in names:
-        run(name)
-        fresh = [
-            s
-            for s in _stage_rows(ui, app_id)
-            if (s["stageId"], s["attemptId"]) not in seen
-        ]
-        seen.update((s["stageId"], s["attemptId"]) for s in fresh)
+        with new_stages(spark) as fresh:
+            run(name)
         mb = 1024.0 * 1024.0
         inp = sum(s["inputBytes"] for s in fresh)
         shw = sum(s["shuffleWriteBytes"] for s in fresh)

@@ -136,3 +136,36 @@ def test_cpu_probe_preferred_when_both_maps_carry_it():
     res_io = bench_history.compare_maps(cur, old)
     assert res_io["mode"].startswith("true IO-calibration")
     assert res_io["ratios"]["a"] > 1.5
+
+
+def _main_against_head(monkeypatch, cur: dict) -> tuple[int, dict]:
+    """Run ``main --baseline HEAD`` with ``cur`` as the working-tree map;
+    return its exit code and the comparison it printed."""
+    runs = []
+    compare = bench_history.compare_maps
+    load = bench_history._load_map
+    monkeypatch.setattr(
+        bench_history, "compare_maps", lambda *a, **k: runs.append(compare(*a, **k)) or runs[-1]
+    )
+    monkeypatch.setattr(
+        bench_history, "_load_map", lambda rev: copy.deepcopy(cur) if rev is None else load(rev)
+    )
+    code = bench_history.main(["--baseline", "HEAD"])
+    return code, runs[0]
+
+
+def test_baseline_head_green_on_unchanged_map(monkeypatch):
+    """The before/after compare around a bench refresh: the committed map
+    against itself passes, every normalized ratio exactly 1.0."""
+    code, res = _main_against_head(monkeypatch, bench_history._load_map("HEAD"))
+    assert code == 0
+    assert set(res["ratios"].values()) == {1.0}
+
+
+def test_baseline_head_red_on_planted_regression(monkeypatch):
+    cur = bench_history._load_map("HEAD")
+    victim = "top_parts_by_revenue"
+    cur["queries"][victim] = cur["queries"][victim] * 4 + 3.0
+    code, res = _main_against_head(monkeypatch, cur)
+    assert code == 1
+    assert set(res["unjustified"]) == {victim}

@@ -113,6 +113,20 @@ def test_merge_delta_current_never_shuffles(spark, current):
     assert a == b
 
 
+def test_broadcastable_bounds_rows_and_bytes_inclusively():
+    """The one broadcast gate feed import, release and the upsert sink
+    share: both bounds hold at equality, and either one alone trips it."""
+    from harvester_database_and_automation_spark.operators.merge import (
+        BROADCAST_MAX_BYTES,
+        BROADCAST_MAX_ROWS,
+        broadcastable,
+    )
+
+    assert broadcastable(BROADCAST_MAX_ROWS, BROADCAST_MAX_BYTES)
+    assert not broadcastable(BROADCAST_MAX_ROWS + 1, 0)
+    assert not broadcastable(1, BROADCAST_MAX_BYTES + 1)
+
+
 def test_update_from_sets_only_listed_columns(spark, current):
     src = spark.createDataFrame(
         [(2, "m2-upd", "ZZZ"), (9, "m9", "TTT")], SCHEMA  # 9 matches nothing
